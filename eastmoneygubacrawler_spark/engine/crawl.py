@@ -25,18 +25,20 @@ is proven against the fixtures' pure-Python simulator in tests.
 
 from __future__ import annotations
 
-import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import urls as U
 from ..functions.extract import extract_text_udf, parse_list_page_udf
 from ..operators import frontier as FR
-from ..operators import seen as SE
+from ..operators.seen import filter_unseen, with_shard
 from ..storage.backend import SnapshotStore
+from .seen_index import open_round_indexes
 
 POSTS_KEY = ["stock_code", "content_type", "url_id"]
 
@@ -87,7 +89,6 @@ class CrawlConfig:
     # waves broadcast strictly faster (r6c 1x ABAB, 0.43M rows).  Neither
     # constant strategy can be right at 100x; the row count of every wave
     # batch is already known (the politeness count) so the choice is free.
-    # Env override EGS_BOUNDED_BC_MAX_ROWS lets A/B studies force either arm.
     bounded_bc_max_rows: int = 500_000
     # depth-1 text strategy: "join" = fetch join then extract (html crosses
     # the exchange on the SMJ path); "scan_extract" = bloom-pruned scan with
@@ -173,7 +174,11 @@ def _with_url_identity(df: DataFrame, n_salts: int) -> DataFrame:
     )
 
 
-def _materialize_concurrent(frames: list) -> None:
+def _pkey_hash(df: DataFrame) -> DataFrame:
+    return df.withColumn("url_hash", F.xxhash64(*POSTS_KEY))
+
+
+def _materialize_concurrent(spark: SparkSession, frames: list) -> None:
     """Materialize several independent lazily-checkpointed frames as
     concurrent driver-thread jobs (optimization guide §2.6: actions are only
     sequential because the driver calls them sequentially) — the wall is
@@ -183,12 +188,8 @@ def _materialize_concurrent(frames: list) -> None:
         for df in frames:
             df.count()
         return
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
     with ThreadPoolExecutor(max_workers=len(frames)) as pool:
-        futs = [pool.submit(inheritable_thread_target(df.count)) for df in frames]
+        futs = [pool.submit(inheritable_thread_target(spark)(df.count)) for df in frames]
         for f in futs:
             f.result()
 
@@ -242,43 +243,16 @@ def run_crawl(
     posts_prev = store.load(spark, "posts")
     seen_prev = store.load(spark, "seen")
     store_meta = store.meta()
-    # incremental bloom index: blobs persist in the store, so recrawl rounds
-    # never re-scan the full seen corpus to rebuild the front-filter — they
-    # OR-merge the round's delta blobs in (operators/seen.merge_bloom_shards).
-    # The manifest records the index geometry (n_shards, m, k) and the round
-    # it covers: a config drift (different --n-shards/--bloom-fpp) or a lag
-    # (a use_bloom=False round committed seen without the index) would
-    # otherwise probe wrong/stale blobs — bloom FALSE NEGATIVES, i.e. refetch
-    # of seen URLs and double MoR patches.  Drift/lag ⇒ rebuild from seen_prev.
-    bloom_prev = None
-    cuckoo_prev = None
-    bloom_geom = dict(
-        zip(("m", "k"), SE._bloom_params(SE.BLOOM_KEYS_PER_SHARD, cfg.bloom_fpp))
-    ) | {"n_shards": cfg.n_shards}
-    from ..operators import cuckoo as CK
-
-    cuckoo_geom = {"n_shards": cfg.n_shards, "slots": CK.SLOTS}
-    if cfg.use_bloom and cfg.seen_filter == "cuckoo":
-        # the cuckoo flavor persists incrementally exactly like seen_bloom:
-        # blobs in the store, geometry + covered round in the manifest;
-        # drift/lag ⇒ rebuild from seen_prev (same contract as below)
-        cm = store_meta.get("seen_cuckoo")
-        fresh = (
-            cm is not None
-            and all(cm.get(f) == cuckoo_geom[f] for f in ("n_shards", "slots"))
-            and cm.get("round") == store.current_round()
-        )
-        if fresh:
-            cuckoo_prev = store.load(spark, "seen_cuckoo")
-    elif cfg.use_bloom:
-        bm = store_meta.get("seen_bloom")
-        fresh = (
-            bm is not None
-            and all(bm.get(f) == bloom_geom[f] for f in ("n_shards", "m", "k"))
-            and bm.get("round") == store.current_round()
-        )
-        if fresh:
-            bloom_prev = store.load(spark, "seen_bloom")
+    posts_keys_prev = (
+        posts_prev.select(*POSTS_KEY) if posts_prev is not None else None
+    )
+    # persisted front-filters (engine/seen_index.py): the URL-seen index gates
+    # depth-1 refetches and the seen delta; the posts-key index lets each
+    # wave's dedup touch the exact posts-key corpus only for its suspects
+    seen_idx, posts_idx = open_round_indexes(
+        spark, store, cfg, seen_prev,
+        _pkey_hash(posts_keys_prev) if posts_keys_prev is not None else None,
+    )
 
     if fetcher is None:
         from .fetch import FixtureFetcher
@@ -287,9 +261,7 @@ def run_crawl(
     # per-call override for politeness-bounded batches (None ⇒ follow the
     # fetcher's instance default); see CrawlConfig.bounded_fetch_broadcast
     bounded_bc = True if cfg.bounded_fetch_broadcast else None
-    bc_max_rows = int(
-        os.environ.get("EGS_BOUNDED_BC_MAX_ROWS", cfg.bounded_bc_max_rows)
-    )
+    bc_max_rows = cfg.bounded_bc_max_rows
 
     def _fetch(batch: DataFrame, bc: bool | None) -> DataFrame:
         """Fetch with the per-call broadcast override only when one is set —
@@ -370,39 +342,6 @@ def run_crawl(
         )
     )
     list_frontier = _with_url_identity(list_frontier, cfg.n_salts).transform(_cached)
-
-    posts_keys_prev = (
-        posts_prev.select(*POSTS_KEY) if posts_prev is not None else None
-    )
-
-    # posts-key bloom front-filter (r4 verdict item 2): the per-wave dedup
-    # against ALL previously-stored post keys gets the same treatment the
-    # URL-seen set already has — a persisted bloom keyed on
-    # xxhash64(stock, type, url_id) probes each wave's items, only bloom
-    # HITS (suspects ≈ the true re-listed duplicates) touch the exact
-    # posts-key corpus, and a suspect-free wave (the common case on a
-    # forward crawl) skips it entirely.  Geometry + covered round ride the
-    # manifest exactly like seen_bloom; drift or lag (e.g. the round after
-    # a purge — blooms cannot delete) ⇒ rebuild from posts_prev, once.
-    def _pkey_hash(df: DataFrame) -> DataFrame:
-        return df.withColumn("url_hash", F.xxhash64(*POSTS_KEY))
-
-    pbloom = None
-    if cfg.use_bloom:
-        pbm = store_meta.get("posts_bloom")
-        pbloom_fresh = (
-            pbm is not None
-            and all(pbm.get(f) == bloom_geom[f] for f in ("n_shards", "m", "k"))
-            and pbm.get("round") == store.current_round()
-        )
-        if pbloom_fresh:
-            pbloom = store.load(spark, "posts_bloom")
-        elif posts_keys_prev is not None:
-            # bootstrap: one O(corpus) distributed build this round, lazily
-            # checkpointed so the commit-time merge reuses it un-recomputed
-            pbloom = SE.build_bloom_shards(
-                _pkey_hash(posts_keys_prev), cfg.n_shards, fpp=cfg.bloom_fpp
-            ).localCheckpoint(eager=False)
 
     # ---- wave loop over list pages ------------------------------------------
     # Politeness waves process each host's pages in canonical order, so within
@@ -508,14 +447,13 @@ def run_crawl(
         if round_keys is not None:
             firsts_wave = firsts_wave.join(round_keys, on=POSTS_KEY, how="left_anti")
         if posts_keys_prev is not None:
-            if pbloom is not None:
-                flagged = (
-                    SE.bloom_maybe_seen(
-                        _pkey_hash(firsts_wave), pbloom, cfg.n_shards
-                    )
-                    .drop("url_hash")
-                    .localCheckpoint(eager=True)
+            flagged = posts_idx.maybe_seen(_pkey_hash(firsts_wave))
+            if flagged is None:
+                firsts_wave = firsts_wave.join(
+                    posts_keys_prev, on=POSTS_KEY, how="left_anti"
                 )
+            else:
+                flagged = flagged.drop("url_hash").localCheckpoint(eager=True)
                 suspects = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
                 fresh_rows = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
                 # resolve the (few) suspects with the corpus on the STREAM
@@ -528,7 +466,7 @@ def run_crawl(
                 # corpus is never scanned (measured: 0.27s vs 0.85s full
                 # scan on a 5M-key corpus).  The joins fold into the
                 # wave's existing firsts_wave eager checkpoint job, so the
-                # posts-bloom path adds zero driver actions.
+                # posts-key index adds zero driver actions.
                 dup_keys = posts_keys_prev.join(
                     F.broadcast(suspects.select(*POSTS_KEY)),
                     on=POSTS_KEY, how="left_semi",
@@ -537,10 +475,6 @@ def run_crawl(
                     suspects.join(
                         F.broadcast(dup_keys), on=POSTS_KEY, how="left_anti"
                     )
-                )
-            else:
-                firsts_wave = firsts_wave.join(
-                    posts_keys_prev, on=POSTS_KEY, how="left_anti"
                 )
         firsts_wave = firsts_wave.localCheckpoint(eager=True)
         _mark('list_fetch_parse')
@@ -576,7 +510,7 @@ def run_crawl(
         # materialize the two independent lazy checkpoints concurrently —
         # the firsts_wave job above already warmed the fetched/page_rows
         # caches, so these are two small jobs racing nothing
-        _materialize_concurrent([wave_lineage, wave_pages])
+        _materialize_concurrent(spark, [wave_lineage, wave_pages])
         list_seen_pages = list_seen_pages.unionByName(
             wave_pages.filter(F.col("ok")).select(
                 "stock_code", "content_type", "page", "url"
@@ -704,8 +638,6 @@ def run_crawl(
     post_seen_urls = spark.createDataFrame([], "url string")
     text_ok = None
     d1_frontier_rows = None
-    bootstrap_blooms = None  # full-corpus build done at the d1 gate, if any
-    bootstrap_cuckoo = None
 
     def _run_depth1() -> dict | None:
         """Depth-1 text pipeline (gates → politeness → fetch → extract).
@@ -717,44 +649,14 @@ def run_crawl(
         if d1_cand is None:
             return None
         t_d1 = time.time()
-        out: dict = {"bootstrap_blooms": None, "bootstrap_cuckoo": None}
+        out: dict = {}
         cand = _with_url_identity(d1_cand, cfg.n_salts)
         if cfg.apply_robots and robots is not None:
             cand = FR.robots_gate(cand, robots)
-        # seen gate: bloom front-filter + exact anti-join (previously
-        # extracted URLs never refetched)
+        # seen gate: front-filter + exact anti-join (previously extracted
+        # URLs never refetched)
         if seen_prev is not None:
-            if cfg.use_bloom and cfg.seen_filter == "cuckoo":
-                # stored blobs win (O(delta) per round); the full-corpus
-                # build runs only on bootstrap and is checkpointed so the
-                # commit-path merge reuses it (seen_bloom parity)
-                if cuckoo_prev is not None:
-                    shards = cuckoo_prev
-                else:
-                    shards = out["bootstrap_cuckoo"] = CK.build_cuckoo_shards(
-                        seen_prev, cfg.n_shards, headroom=2.0
-                    ).localCheckpoint(eager=False)
-                cand = CK.filter_unseen_with_cuckoo(
-                    cand, seen_prev, shards, cfg.n_shards
-                )
-            elif cfg.use_bloom:
-                # stored blobs win (O(delta) maintenance); full build only on
-                # bootstrap (no index yet / stale geometry).  Checkpoint that
-                # bootstrap build — blob bytes are bounded by geometry
-                # (n_shards × m/8), never by corpus — so the commit path can
-                # reuse it instead of scanning the full seen corpus a second
-                # time in the same round.
-                if bloom_prev is not None:
-                    shards = bloom_prev
-                else:
-                    shards = out["bootstrap_blooms"] = SE.build_bloom_shards(
-                        seen_prev, cfg.n_shards, fpp=cfg.bloom_fpp
-                    ).localCheckpoint(eager=False)
-                cand = SE.filter_unseen_with_bloom(
-                    cand, seen_prev, shards, cfg.n_shards
-                )
-            else:
-                cand = SE.filter_unseen(cand, seen_prev)
+            cand = seen_idx.filter_unseen(cand, seen_prev)
         cand = cand.transform(_cached)
 
         text_budget = cfg.text_budget_per_host or cfg.budget_per_host
@@ -908,7 +810,7 @@ def run_crawl(
         if cfg.apply_robots and robots is not None:
             d2_cand = FR.robots_gate(d2_cand, robots)
         if seen_prev is not None:
-            d2_cand = SE.filter_unseen(d2_cand, seen_prev)
+            d2_cand = filter_unseen(d2_cand, seen_prev)
         d2_cand = d2_cand.transform(_cached)
         text_budget = cfg.text_budget_per_host or cfg.budget_per_host
         c_sched, c_unsched = FR.politeness_split(
@@ -1055,31 +957,18 @@ def run_crawl(
         return out
 
     # depth-1 and depth-2 are INDEPENDENT pipelines (both derive only from
-    # posts_new + the previous frontier/seen state); when both are active
-    # they run as two concurrent driver threads so one pipeline's straggler
-    # tail back-fills the other's idle cores (guide §2.6 — Spark happily
-    # runs several jobs at once; actions are only sequential because the
-    # driver calls them sequentially).  Their phase walls are per-pipeline
-    # elapsed times, so 'text_fetch_extract' + 'comment_fetch' can sum to
-    # more than the round wall when overlapped.
-    overlap = (
-        d1_cand is not None
-        and cfg.max_depth >= 2
-        and os.environ.get("EGS_D1D2_OVERLAP", "1") == "1"
-    )
-    if overlap:
-        from concurrent.futures import ThreadPoolExecutor as _TPE
-
-        from pyspark import inheritable_thread_target
-
-        with _TPE(max_workers=2) as _pool:
-            _f1 = _pool.submit(inheritable_thread_target(_run_depth1))
-            _f2 = _pool.submit(inheritable_thread_target(_run_depth2))
-            d1_res = _f1.result()
-            d2_res = _f2.result()
-    else:
-        d1_res = _run_depth1()
-        d2_res = _run_depth2()
+    # posts_new + the previous frontier/seen state); they run as two
+    # concurrent driver threads so one pipeline's straggler tail back-fills
+    # the other's idle cores (guide §2.6 — Spark happily runs several jobs at
+    # once; actions are only sequential because the driver calls them
+    # sequentially).  Their phase walls are per-pipeline elapsed times, so
+    # 'text_fetch_extract' + 'comment_fetch' can sum to more than the round
+    # wall when overlapped.
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        f1 = pool.submit(inheritable_thread_target(spark)(_run_depth1))
+        f2 = pool.submit(inheritable_thread_target(spark)(_run_depth2))
+        d1_res = f1.result()
+        d2_res = f2.result()
     phase_t["_last"] = time.time()
 
     if d1_res is not None:
@@ -1087,8 +976,6 @@ def run_crawl(
         text_ok = d1_res["text_ok"]
         post_seen_urls = d1_res["post_seen_urls"]
         d1_frontier_rows = d1_res["d1_frontier_rows"]
-        bootstrap_blooms = d1_res["bootstrap_blooms"]
-        bootstrap_cuckoo = d1_res["bootstrap_cuckoo"]
         mean_text_bytes = d1_res["mean_text_bytes"]
         lineage_frames.append(d1_res["lineage"])
     comments_prev = d2_res.get("comments_prev") if d2_res is not None else None
@@ -1197,34 +1084,14 @@ def run_crawl(
         .distinct()
         .withColumn("url", U.canonicalize_url(F.col("url")))
         .withColumn("url_hash", U.url_hash(F.col("url")))
-        .transform(lambda d: SE.with_shard(d, cfg.n_shards))
+        .transform(lambda d: with_shard(d, cfg.n_shards))
         .withColumn("round", F.lit(round_id))
         .select("url_hash", "url", "shard", "round")
     )
-    if seen_prev is not None:
-        # delta-only append: urls already in the seen set are not re-written.
-        # With a fresh bloom index the probe pre-prunes: rows the filter has
-        # never seen (the vast majority of a round's delta) skip the exact
-        # anti-join against the FULL seen corpus — only the few-% suspects
-        # (bloom hits) touch it, exactly like the d1 gate above.  O(delta)
-        # instead of O(corpus-join) per round.
-        if bloom_prev is not None:
-            seen_new = SE.filter_unseen_with_bloom(
-                seen_new, seen_prev, bloom_prev, cfg.n_shards
-            ).select("url_hash", "url", "shard", "round")
-        elif cuckoo_prev is not None:
-            seen_new = CK.filter_unseen_with_cuckoo(
-                seen_new, seen_prev, cuckoo_prev, cfg.n_shards
-            ).select("url_hash", "url", "shard", "round")
-        else:
-            seen_new = seen_new.join(
-                seen_prev.select("url"), on="url", how="left_anti"
-            ).select("url_hash", "url", "shard", "round")
-    if cfg.use_bloom:
-        # seen_new feeds TWO commit jobs (the seen delta write and the bloom
-        # delta-blob build); materialize once or the whole probe/anti-join
-        # plan executes twice inside the commit wall
-        seen_new = seen_new.localCheckpoint(eager=True)
+    # delta-only append: urls already in the seen set are not re-written
+    # (front-filter misses — the vast majority of a round's delta — skip the
+    # exact anti-join against the FULL seen corpus)
+    seen_new = seen_idx.dedup_delta(seen_new, seen_prev)
     appends["seen"] = seen_new
 
     if lineage_frames:
@@ -1321,93 +1188,15 @@ def run_crawl(
         commit_meta["posts_rows"] = prev_count + n_posts_new
     elif "posts_rows" not in store_meta and posts_prev is None:
         commit_meta["posts_rows"] = 0
-    if cfg.use_bloom and cfg.seen_filter == "cuckoo":
-        # maintain the cuckoo index incrementally: the round's seen delta is
-        # INSERTED into the stored per-shard tables (the delete-capable
-        # structure's native delta-merge); a shard that outgrew its table
-        # passes through flagged and is rebuilt resized from the full corpus
-        # — only that shard, only when it actually fills.
-        if cuckoo_prev is not None:
-            base = cuckoo_prev
-        elif seen_prev is not None:
-            # reuse the d1 gate's checkpointed bootstrap build when it ran;
-            # a second full seen scan in the same round is pure waste
-            base = (
-                bootstrap_cuckoo
-                if bootstrap_cuckoo is not None
-                else CK.build_cuckoo_shards(seen_prev, cfg.n_shards, headroom=2.0)
-            )
-        else:
-            base = None
-        if base is None:
-            blobs = CK.build_cuckoo_shards(seen_new, cfg.n_shards, headroom=2.0)
-        else:
-            # checkpoint: rebuild_overflowed_shards probes the merged blobs
-            # (head over the flag column) and then writes them — without the
-            # checkpoint the cogrouped merge would execute twice
-            merged = CK.merge_cuckoo_shards(
-                base, seen_new, cfg.n_shards
-            ).localCheckpoint(eager=True)
-            seen_all = (
-                seen_prev.select("url_hash").unionByName(
-                    seen_new.select("url_hash")
-                )
-                if seen_prev is not None
-                else seen_new.select("url_hash")
-            )
-            blobs = CK.rebuild_overflowed_shards(merged, seen_all, cfg.n_shards)
-        snapshots["seen_cuckoo"] = blobs
-        commit_meta["seen_cuckoo"] = {**cuckoo_geom, "round": round_id}
-    elif cfg.use_bloom:
-        # maintain the bloom index incrementally: blobs for THIS round's seen
-        # delta, OR-merged into the stored blob set (identical geometry).  At
-        # sandbox sizing the snapshot is ~15 MB; a 10^4-shard deployment
-        # would delta-commit only touched shards — same merge operator.
-        delta_blobs = SE.build_bloom_shards(
-            seen_new, cfg.n_shards, fpp=cfg.bloom_fpp
-        )
-        if bloom_prev is not None:
-            blobs = SE.merge_bloom_shards(bloom_prev, delta_blobs)
-        elif seen_prev is not None:
-            # reuse the d1 gate's checkpointed bootstrap build when it ran;
-            # a second full seen scan in the same round is pure waste
-            blobs = SE.merge_bloom_shards(
-                bootstrap_blooms
-                if bootstrap_blooms is not None
-                else SE.build_bloom_shards(
-                    seen_prev, cfg.n_shards, fpp=cfg.bloom_fpp
-                ),
-                delta_blobs,
-            )
-        else:
-            blobs = delta_blobs
-        snapshots["seen_bloom"] = blobs
-        commit_meta["seen_bloom"] = {**bloom_geom, "round": round_id}
-
-    if cfg.use_bloom:
-        # posts-key bloom maintained incrementally alongside the URL index:
-        # delta blobs from this round's new post keys, OR-merged into the
-        # stored/bootstrap blobs.  Committed every bloom round so the
-        # freshness check (covered round == store round) holds; a purge
-        # round skips this commit and the resulting lag forces a one-time
-        # rebuild from the post-purge posts table (blooms cannot delete).
-        # At sandbox sizing the snapshot is small; a 10^4-shard deployment
-        # delta-commits only touched shards — same merge operator.
-        pk_delta = (
-            SE.build_bloom_shards(
-                _pkey_hash(posts_new.select(*POSTS_KEY)),
-                cfg.n_shards, fpp=cfg.bloom_fpp,
-            )
-            if n_posts_new > 0
-            else None
-        )
-        if pbloom is not None and pk_delta is not None:
-            pblobs = SE.merge_bloom_shards(pbloom, pk_delta)
-        else:
-            pblobs = pk_delta if pk_delta is not None else pbloom
-        if pblobs is not None:
-            snapshots["posts_bloom"] = pblobs
-            commit_meta["posts_bloom"] = {**bloom_geom, "round": round_id}
+    # the indexes fold this round's new keys in: O(delta) per round, never a
+    # re-scan of the corpus while the stored blobs stay fresh
+    pk_delta = (
+        _pkey_hash(posts_new.select(*POSTS_KEY)) if n_posts_new > 0 else None
+    )
+    for idx, delta in ((seen_idx, seen_new), (posts_idx, pk_delta)):
+        committed = idx.commit(delta, round_id)
+        if committed is not None:
+            snapshots[idx.table], commit_meta[idx.table] = committed
 
     _mark('assemble')
     # frontier (small cross-round state) and the bloom index are snapshot
@@ -1421,13 +1210,14 @@ def run_crawl(
     )
 
     _mark('commit')
+    # counted while the probe cache is still warm: after the unpersist the
+    # count would re-run (and, over HTTP, re-request) the probe fetch
+    n_probes = probe_res.count()
     for df_ in caches:  # release this round's blocks (commit is durable)
         df_.unpersist()
     phase_t.pop('_last', None)
     wall_s = time.time() - t0
-    urls_fetched = (
-        list_fetched_rows + n_text_fetched + n_comment_fetched + probe_res.count()
-    )
+    urls_fetched = list_fetched_rows + n_text_fetched + n_comment_fetched + n_probes
     return {
         "round": round_id,
         "waves": waves,

@@ -13,13 +13,14 @@ the store.  One call removes a URL set from every stateful surface:
 - **frontier / frontier_failed**: the frontier snapshot is O(active) and is
   filtered + rewritten (its normal per-round cost); frontier_failed takes an
   equality delete like the other append tables.
-- **seen_cuckoo**: purged keys are DELETED from the stored per-shard tables
-  in place (operators/cuckoo.delete_from_cuckoo_shards) — the index stays
-  fresh through the purge, no rebuild.  This is the cuckoo's structural win.
-- **seen_bloom**: a bloom cannot delete (bits are shared), so the purge
-  drops the index from the manifest meta — the next crawl round detects the
-  lag and rebuilds from the (now-smaller) seen table.  The asymmetry is the
-  point, and it is recorded in the returned metrics.
+- **the seen index** (engine/seen_index.py, the same lifecycle the crawl
+  round uses): the fresh one gets its ``purge`` — a cuckoo DELETES the
+  purged keys from its stored per-shard tables in place and stays fresh (no
+  rebuild: the cuckoo's structural win); a bloom cannot delete (bits are
+  shared), so its manifest entry is left to lag and the next crawl round
+  rebuilds it from the (now-smaller) seen table.  The asymmetry is the
+  point, and it is recorded in the returned metrics.  The posts-key bloom
+  lags the same way and is rebuilt from the post-purge posts table.
 
 Purged URLs become refetchable: they are gone from ``seen``, so the next
 round's gate schedules them again — the purge is also the "force recrawl
@@ -36,8 +37,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import urls as U
-from ..operators import cuckoo as CK
 from ..storage.backend import SnapshotStore
+from .seen_index import committed_seen_index
 
 
 def purge_urls(
@@ -111,25 +112,14 @@ def purge_urls(
             purged.select("url"), on="url", how="left_anti"
         )
 
-    store_meta = store.meta()
-    cuckoo_kept_fresh = False
-    cm = store_meta.get("seen_cuckoo")
-    if cm is not None and cm.get("round") == store.current_round():
-        shards = store.load(spark, "seen_cuckoo")
-        if shards is not None:
-            ns = n_shards or cm["n_shards"]
-            snapshots["seen_cuckoo"] = CK.delete_from_cuckoo_shards(
-                shards, purged_seen, ns
-            )
-            meta["seen_cuckoo"] = {**cm, "round": round_id}
-            cuckoo_kept_fresh = True
-    bloom_invalidated = False
-    bm = store_meta.get("seen_bloom")
-    if bm is not None and bm.get("round") == store.current_round():
-        # a bloom cannot delete: leave the stale blobs (meta round now lags
-        # the store round, so the next crawl's freshness check rebuilds from
-        # the post-purge seen table)
-        bloom_invalidated = True
+    # the seen index the last round committed: a format that can delete
+    # drops the keys in place and stays fresh; a bloom's entry is left to lag
+    # the store round, so the next crawl rebuilds it from the post-purge seen
+    # table
+    index = committed_seen_index(spark, store, n_shards)
+    kept = index.purge(purged_seen, round_id) if index is not None else None
+    if kept is not None:
+        snapshots[index.table], meta[index.table] = kept
 
     # posts_rows is deliberately NOT decremented: it is the HIGH-WATER
     # insertion count that seeds crawl_seq, and reusing a purged row's
@@ -142,8 +132,8 @@ def purge_urls(
         "round": round_id,
         "urls_purged": n_purged,          # full canonicalized request list
         "urls_purged_seen": n_purged_seen,  # subset that was in seen
-        "cuckoo_kept_fresh": cuckoo_kept_fresh,
-        "bloom_invalidated": bloom_invalidated,
+        "cuckoo_kept_fresh": kept is not None,
+        "bloom_invalidated": index is not None and kept is None,
     }
 
 

@@ -17,8 +17,10 @@ CoNEXT 2014 — public paper): fingerprint f = 8-bit nonzero hash of the key;
 two candidate buckets i1 = h(key) mod m, i2 = i1 XOR h(f) mod m; insert into
 any free slot, else evict-and-relocate up to MAX_KICKS.  Everything below is
 vectorized numpy inside ``applyInPandas`` tasks — one task per shard, one
-blob row per shard, cogrouped probe identical in shape to seen.py's bloom
-(blobs never transit the driver).
+blob row per shard (blobs never transit the driver).  The probe runs in
+seen.py's shared shell with :func:`cuckoo_contains` as its kernel; the
+engine drives build / merge / delete through the one index lifecycle in
+``engine/seen_index.py``.
 
 Derivations all start from the engine's single xxhash64 url_hash, so the
 filter is keyed by canonicalized URL hash exactly like the exact layer.
@@ -31,7 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .seen import with_shard
+from .seen import maybe_seen, with_shard
 
 SLOTS = 4  # slots per bucket
 MAX_KICKS = 500
@@ -342,50 +344,12 @@ def _rebuild_one(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
+def cuckoo_contains(blob: pd.Series, h: np.ndarray) -> np.ndarray:
+    """Cuckoo membership kernel over one shard's blob row (m, table)."""
+    m = int(blob["m"])
+    table = np.frombuffer(blob["table"], dtype=np.uint8).reshape(m, SLOTS)
+    return contains(table, h)
+
+
 def cuckoo_maybe_seen(df: DataFrame, shards: DataFrame, n_shards: int) -> DataFrame:
-    """Adds ``maybe_seen`` by cogrouping candidates with their shard's blob.
-    No false negatives; suspects go to the exact anti-join."""
-    from pyspark.sql.types import BooleanType, StructField, StructType
-
-    added_shard = "shard" not in df.columns
-    cand = with_shard(df, n_shards) if added_shard else df
-    out_schema = StructType(
-        list(df.schema.fields) + [StructField("maybe_seen", BooleanType())]
-    )
-    out_cols = [f.name for f in out_schema.fields]
-
-    def _probe(cdf: pd.DataFrame, bdf: pd.DataFrame) -> pd.DataFrame:
-        h = cdf["url_hash"].to_numpy(np.int64)
-        if len(bdf) == 0:
-            hit = np.zeros(len(h), dtype=bool)
-        else:
-            m = int(bdf["m"].iloc[0])
-            table = np.frombuffer(bdf["table"].iloc[0], dtype=np.uint8).reshape(
-                m, SLOTS
-            )
-            hit = contains(table, h)
-        out = cdf.copy()
-        out["maybe_seen"] = hit
-        if added_shard:
-            out = out.drop(columns=["shard"])
-        return out[out_cols]
-
-    return (
-        cand.groupBy("shard")
-        .cogroup(shards.groupBy("shard"))
-        .applyInPandas(_probe, out_schema)
-    )
-
-
-def filter_unseen_with_cuckoo(
-    candidates: DataFrame, seen: DataFrame | None, shards: DataFrame, n_shards: int
-) -> DataFrame:
-    """Two-layer dedup, cuckoo front-filter + exact confirm of suspects."""
-    from .seen import filter_unseen
-
-    if seen is None:
-        return candidates
-    flagged = cuckoo_maybe_seen(candidates, shards, n_shards)
-    definitely_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    suspects = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-    return definitely_new.unionByName(filter_unseen(suspects, seen))
+    return maybe_seen(df, shards, n_shards, cuckoo_contains)

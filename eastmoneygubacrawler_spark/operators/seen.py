@@ -1,4 +1,5 @@
-"""URL-seen set: exact sharded anti-join + bloom front-filter.
+"""URL-seen set: exact sharded anti-join, the shared front-filter probe
+shell, and the bloom format.
 
 Replaces the reference's Mongo compound unique index (core/crawler.py:726-733)
 — its only dedup structure — with the scale design from the north rule:
@@ -21,6 +22,13 @@ Replaces the reference's Mongo compound unique index (core/crawler.py:726-733)
    (a few % false positives) are confirmed by the exact anti-join — false
    positives cost a lookup, never correctness.
 
+3. **One probe shell for every format**: :func:`maybe_seen` and
+   :func:`filter_unseen_with` do the cogroup and the exact confirm; a format
+   supplies only its per-shard membership kernel (:func:`bloom_contains`
+   here, ``cuckoo.cuckoo_contains``).  Which format a stored index uses, and
+   its lifecycle (freshness, bootstrap, commit merge, purge), lives in
+   ``engine/seen_index.py``.
+
 Double hashing from the single xxhash64 key: index_i = (h1 + i*h2) mod m —
 standard Kirsch–Mitzenmacher construction, fully vectorized in numpy.
 """
@@ -28,6 +36,7 @@ standard Kirsch–Mitzenmacher construction, fully vectorized in numpy.
 from __future__ import annotations
 
 import math
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
@@ -148,9 +157,32 @@ def merge_bloom_shards(prev: DataFrame, delta: DataFrame) -> DataFrame:
     )
 
 
-def bloom_maybe_seen(df: DataFrame, shards: DataFrame, n_shards: int) -> DataFrame:
+def bloom_contains(blob: pd.Series, h: np.ndarray) -> np.ndarray:
+    """Bloom membership kernel over one shard's blob row (m, k, bits)."""
+    m = int(blob["m"])
+    k = int(blob["k"])
+    bits = np.frombuffer(blob["bits"], dtype=np.uint64)
+    pos = _bloom_positions(h, m, k)
+    hit = np.ones(len(h), dtype=bool)
+    for j in range(k):
+        p = pos[:, j]
+        hit &= (bits[(p >> np.uint64(6)).astype(np.int64)]
+                >> (p & np.uint64(63))) & np.uint64(1) == 1
+    return hit
+
+
+# ---------------------------------------------------------------------------
+# the probe shell every filter format shares (bloom here, cuckoo in cuckoo.py)
+
+
+def maybe_seen(
+    df: DataFrame, shards: DataFrame, n_shards: int,
+    contains: Callable[[pd.Series, np.ndarray], np.ndarray],
+) -> DataFrame:
     """Adds ``maybe_seen`` bool by cogrouping candidates with the blob table
-    on the shard key — each task gets one shard's candidates + its one blob.
+    on the shard key — each task gets one shard's candidates + its one blob
+    row, and the format's kernel ``contains(blob_row, url_hashes)`` answers
+    membership.
 
     Rows with maybe_seen == false are guaranteed-new (no false negatives);
     only maybe_seen rows need the exact anti-join.  An absent blob row means
@@ -170,15 +202,7 @@ def bloom_maybe_seen(df: DataFrame, shards: DataFrame, n_shards: int) -> DataFra
         if len(bdf) == 0:
             hit = np.zeros(len(h), dtype=bool)
         else:
-            m = int(bdf["m"].iloc[0])
-            k = int(bdf["k"].iloc[0])
-            bits = np.frombuffer(bdf["bits"].iloc[0], dtype=np.uint64)
-            pos = _bloom_positions(h, m, k)
-            hit = np.ones(len(h), dtype=bool)
-            for j in range(k):
-                p = pos[:, j]
-                hit &= (bits[(p >> np.uint64(6)).astype(np.int64)]
-                        >> (p & np.uint64(63))) & np.uint64(1) == 1
+            hit = contains(bdf.iloc[0], h)
         out = cdf.copy()
         out["maybe_seen"] = hit
         if added_shard:
@@ -192,14 +216,19 @@ def bloom_maybe_seen(df: DataFrame, shards: DataFrame, n_shards: int) -> DataFra
     )
 
 
-def filter_unseen_with_bloom(
-    candidates: DataFrame, seen: DataFrame | None, shards: DataFrame, n_shards: int
+def filter_unseen_with(
+    candidates: DataFrame, seen: DataFrame | None, shards: DataFrame,
+    n_shards: int, contains: Callable[[pd.Series, np.ndarray], np.ndarray],
 ) -> DataFrame:
-    """Full two-layer dedup: bloom front-filter, exact confirm of survivors."""
+    """Full two-layer dedup: front-filter probe, exact confirm of suspects."""
     if seen is None:
         return candidates
-    flagged = bloom_maybe_seen(candidates, shards, n_shards)
+    flagged = maybe_seen(candidates, shards, n_shards, contains)
     definitely_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
     suspects = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
     confirmed_new = filter_unseen(suspects, seen)
     return definitely_new.unionByName(confirmed_new)
+
+
+def bloom_maybe_seen(df: DataFrame, shards: DataFrame, n_shards: int) -> DataFrame:
+    return maybe_seen(df, shards, n_shards, bloom_contains)

@@ -8,6 +8,7 @@ now records the geometry + covered round; any drift forces a rebuild from
 ``seen_prev``.
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 from eastmoneygubacrawler_spark.engine import CrawlConfig, run_crawl
@@ -44,24 +45,27 @@ def test_bloom_meta_recorded(spark, tmp_path):
     assert store.meta()["posts_rows"] == store.load(spark, "posts").count()
 
 
-def test_nshards_drift_rebuilds_not_misprobes(spark, tmp_path):
+@pytest.mark.parametrize("seen_filter", ["bloom", "cuckoo"])
+def test_nshards_drift_rebuilds_not_misprobes(spark, tmp_path, seen_filter):
     """Round 1 with a different --n-shards must not refetch/duplicate: the
     stale-geometry index is discarded and rebuilt from seen_prev."""
     pages, seeds, robots = _small_corpus(spark)
     store = SnapshotStore(str(tmp_path / "s"))
     run_crawl(spark, store, pages, seeds, robots, None,
-              CrawlConfig(n_shards=8, fetch_partitions=4, use_bloom=True, max_depth=1))
+              CrawlConfig(n_shards=8, fetch_partitions=4, use_bloom=True,
+                          seen_filter=seen_filter, max_depth=1))
     posts_r0 = store.load(spark, "posts").count()
     m = run_crawl(spark, store, pages, seeds, robots, None,
                   CrawlConfig(n_shards=4, fetch_partitions=4, use_bloom=True,
-                              max_depth=1))
+                              seen_filter=seen_filter, max_depth=1))
     assert m["posts_new"] == 0  # static corpus: a recrawl adds nothing
     _assert_store_sane(spark, store)
     assert store.load(spark, "posts").count() == posts_r0
     # index re-keyed to the new geometry
-    bm = store.meta()["seen_bloom"]
+    table = f"seen_{seen_filter}"
+    bm = store.meta()[table]
     assert bm["n_shards"] == 4 and bm["round"] == 1
-    blobs = store.load(spark, "seen_bloom")
+    blobs = store.load(spark, table)
     assert blobs.select(F.max("shard")).first()[0] <= 3
 
 
@@ -112,21 +116,24 @@ def test_posts_bloom_meta_tracks_rounds(spark, tmp_path):
     assert store.meta()["posts_bloom"]["round"] == 1
 
 
-def test_bloom_off_round_marks_index_stale(spark, tmp_path):
+@pytest.mark.parametrize("seen_filter", ["bloom", "cuckoo"])
+def test_bloom_off_round_marks_index_stale(spark, tmp_path, seen_filter):
     """A use_bloom=False round appends to seen without updating the index;
     the next bloom-on round must detect the lag and rebuild instead of
     probing blobs that miss that round's URLs."""
     pages, seeds, robots = _small_corpus(spark)
     store = SnapshotStore(str(tmp_path / "s"))
-    on = CrawlConfig(n_shards=8, fetch_partitions=4, use_bloom=True, max_depth=1)
+    on = CrawlConfig(n_shards=8, fetch_partitions=4, use_bloom=True,
+                     seen_filter=seen_filter, max_depth=1)
     off = CrawlConfig(n_shards=8, fetch_partitions=4, use_bloom=False, max_depth=1)
+    table = f"seen_{seen_filter}"
     run_crawl(spark, store, pages, seeds, robots, None, on)
     run_crawl(spark, store, pages, seeds, robots, None, off)
-    assert store.meta()["seen_bloom"]["round"] == 0  # index lags seen (round 1)
+    assert store.meta()[table]["round"] == 0  # index lags seen (round 1)
     m2 = run_crawl(spark, store, pages, seeds, robots, None, on)
     assert m2["posts_new"] == 0
     _assert_store_sane(spark, store)
-    assert store.meta()["seen_bloom"]["round"] == 2  # rebuilt + fresh
+    assert store.meta()[table]["round"] == 2  # rebuilt + fresh
     # posts kept exactly one text per url: no duplicate MoR patch ever landed
     posts = store.load(spark, "posts")
     assert posts.filter(F.col("full_text").isNull()).count() == 0

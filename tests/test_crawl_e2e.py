@@ -183,3 +183,28 @@ def test_metrics_and_lineage(spark, crawl_result):
     stages = {r.stage for r in log.select("stage").distinct().collect()}
     assert {"list_fetch", "text_fetch"} <= stages
     assert log.filter(F.col("fetched") > 0).count() > 0
+
+
+def test_round_threads_carry_the_session(spark, tmp_path):
+    """The round's driver threads (the depth-1/depth-2 overlap and the
+    per-wave concurrent materialization) are wrapped with the session, so
+    pyspark never warns that job tags will not be inherited."""
+    import warnings
+
+    from eastmoneygubacrawler_spark.fixtures import FixtureConfig, build_corpus
+    from eastmoneygubacrawler_spark.schema import PAGES, ROBOTS, SEEDS
+
+    corpus = build_corpus(FixtureConfig(n_stocks=1, max_count=40, adversarial=False))
+    store = SnapshotStore(str(tmp_path / "s"))
+    cfg = CrawlConfig(n_shards=8, fetch_partitions=4, use_bloom=False, max_depth=2)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        m = run_crawl(
+            spark, store,
+            spark.createDataFrame(corpus["pages"], PAGES),
+            spark.createDataFrame(corpus["seeds"], SEEDS),
+            spark.createDataFrame(corpus["robots"], ROBOTS),
+            None, cfg,
+        )
+    assert m["posts_new"] > 0
+    assert not [w for w in caught if "Tags will not be inherited" in str(w.message)]

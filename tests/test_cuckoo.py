@@ -1,18 +1,14 @@
 """Partitioned cuckoo-filter seen set: no false negatives, bounded fp,
-delete support, two-layer ≡ exact, engine path ≡ exact path."""
+delete support, engine path ≡ exact path (two-layer ≡ exact for both
+formats: test_seen.py)."""
 
 import numpy as np
-from pyspark.sql import functions as F
 
 from eastmoneygubacrawler_spark.operators.cuckoo import (
-    build_cuckoo_shards,
     build_table,
     contains,
-    cuckoo_maybe_seen,
     delete,
-    filter_unseen_with_cuckoo,
 )
-from eastmoneygubacrawler_spark.operators.seen import filter_unseen
 
 
 def _hashes(n, seed=7):
@@ -40,28 +36,6 @@ def test_numpy_delete_support():
     assert contains(table, kept).all()  # deletes never break other keys
     # deleted keys mostly gone (residual hits = fp collisions only)
     assert contains(table, gone).mean() < 0.05
-
-
-def _urls_df(spark, urls):
-    return spark.createDataFrame([(u,) for u in urls], ["url"]).withColumn(
-        "url_hash", F.xxhash64("url")
-    )
-
-
-def test_two_layer_filter_equals_exact(spark):
-    n_shards = 8
-    seen = _urls_df(spark, [f"https://s.com/{i}" for i in range(2000)])
-    cands = _urls_df(spark, [f"https://s.com/{i}" for i in range(1000, 3000)])
-    shards = build_cuckoo_shards(seen, n_shards)
-    assert shards.columns == ["shard", "m", "table"]
-    via_cuckoo = sorted(
-        r.url for r in filter_unseen_with_cuckoo(cands, seen, shards, n_shards).collect()
-    )
-    via_exact = sorted(r.url for r in filter_unseen(cands, seen).collect())
-    assert via_cuckoo == via_exact
-    # and no seen url is ever flagged new at the filter layer
-    flagged = cuckoo_maybe_seen(seen, shards, n_shards)
-    assert flagged.filter("NOT maybe_seen").count() == 0
 
 
 def test_engine_cuckoo_path_equals_exact_path(spark, tmp_path):

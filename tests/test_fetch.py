@@ -273,7 +273,7 @@ def test_full_crawl_round_over_http_equals_fixture(spark, tmp_path):
 
     corpus = build_corpus(FixtureConfig(n_stocks=1, max_count=50, adversarial=False))
     served = {"/u/" + quote(p["url"], safe=""): bytes(p["html"]) for p in corpus["pages"]}
-    lb = _LoopbackCorpus(served)
+    lb = _RecordingCorpus(served)
     try:
         pages = spark.createDataFrame(corpus["pages"], PAGES)
         seeds = spark.createDataFrame(corpus["seeds"], SEEDS)
@@ -283,8 +283,8 @@ def test_full_crawl_round_over_http_equals_fixture(spark, tmp_path):
 
         def run(fetcher, name):
             store = SnapshotStore(str(tmp_path / name))
-            run_crawl(spark, store, pages, seeds, robots, None, cfg, fetcher=fetcher)
-            return sorted(
+            m = run_crawl(spark, store, pages, seeds, robots, None, cfg, fetcher=fetcher)
+            return m, sorted(
                 map(tuple, store.load(spark, "posts").select(
                     "stock_code", "content_type", "url_id", "url", "title",
                     "crawl_seq", "full_text",
@@ -295,8 +295,11 @@ def test_full_crawl_round_over_http_equals_fixture(spark, tmp_path):
             timeout_s=5, n_partitions=4,
             url_rewrite=lambda u: f"http://127.0.0.1:{port}/u/" + quote(u, safe=""),
         )
-        via_http = run(http_fetcher, "http")
-        via_fixture = run(None, "fixture")
+        m, via_http = run(http_fetcher, "http")
+        # every fetch the round reports went over the wire exactly once: no
+        # action re-runs a fetch whose cached result was already released
+        assert sum(map(len, lb.served_uas.values())) == m["urls_fetched"]
+        _, via_fixture = run(None, "fixture")
         assert via_http == via_fixture
         assert len(via_http) > 0
     finally:
@@ -340,8 +343,8 @@ def test_bounded_broadcast_round_equals_legacy_smj_round(spark, tmp_path):
     assert comments_bc == comments_sj and len(comments_bc) > 0
 
 
-def test_size_aware_bc_cap_store_identity_and_plain_fetcher(spark, tmp_path, monkeypatch):
-    """r7 size-aware fetch strategy: with EGS_BOUNDED_BC_MAX_ROWS=1 every
+def test_size_aware_bc_cap_store_identity_and_plain_fetcher(spark, tmp_path):
+    """r7 size-aware fetch strategy: with bounded_bc_max_rows=1 every
     politeness wave exceeds the cap and falls back to the shuffle join —
     the committed store must be identical to the always-broadcast run.
     Also the restored fetcher protocol (ADVICE r6): a user fetcher with the
@@ -359,22 +362,16 @@ def test_size_aware_bc_cap_store_identity_and_plain_fetcher(spark, tmp_path, mon
     robots = spark.createDataFrame(corpus["robots"], ROBOTS)
 
     def run(name, cap, fetcher=None, bounded=True):
-        if cap is not None:
-            monkeypatch.setenv("EGS_BOUNDED_BC_MAX_ROWS", str(cap))
-        else:
-            monkeypatch.delenv("EGS_BOUNDED_BC_MAX_ROWS", raising=False)
+        cfg = CrawlConfig(n_shards=8, fetch_partitions=4, use_bloom=False,
+                          max_depth=2, bounded_fetch_broadcast=bounded,
+                          bounded_bc_max_rows=cap)
         store = SnapshotStore(str(tmp_path / name))
-        run_crawl(
-            spark, store, pages, seeds, robots, None,
-            CrawlConfig(n_shards=8, fetch_partitions=4, use_bloom=False,
-                        max_depth=2, bounded_fetch_broadcast=bounded),
-            fetcher=fetcher,
-        )
+        run_crawl(spark, store, pages, seeds, robots, None, cfg, fetcher=fetcher)
         return sorted(map(tuple, store.load(spark, "posts").select(
             "stock_code", "content_type", "url_id", "url", "title",
             "crawl_seq", "full_text").collect()))
 
-    posts_default = run("bc", None)
+    posts_default = run("bc", CrawlConfig.bounded_bc_max_rows)
     posts_capped = run("capped", 1)
     assert posts_default == posts_capped and len(posts_default) > 0
 
@@ -382,7 +379,8 @@ def test_size_aware_bc_cap_store_identity_and_plain_fetcher(spark, tmp_path, mon
         def fetch(self, scheduled):  # old signature: no broadcast kwarg
             return super().fetch(scheduled)
 
-    posts_plain = run("plain", None, fetcher=PlainFetcher(pages), bounded=False)
+    posts_plain = run("plain", CrawlConfig.bounded_bc_max_rows,
+                      fetcher=PlainFetcher(pages), bounded=False)
     assert posts_plain == posts_default
 
 

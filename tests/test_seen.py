@@ -1,16 +1,23 @@
 """Seen-set: exact anti-join + bloom shards (no false negatives, bounded fp)."""
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from eastmoneygubacrawler_spark.operators.cuckoo import (
+    build_cuckoo_shards,
+    cuckoo_contains,
+)
 from eastmoneygubacrawler_spark.operators.seen import (
     _bloom_params,
     _bloom_positions,
+    bloom_contains,
     bloom_maybe_seen,
     build_bloom_shards,
     filter_unseen,
-    filter_unseen_with_bloom,
+    filter_unseen_with,
+    maybe_seen,
     with_shard,
 )
 
@@ -49,16 +56,29 @@ def test_bloom_no_false_negatives_and_low_fp(spark):
     assert fp / 5000 < 0.05
 
 
-def test_two_layer_filter_equals_exact(spark):
+@pytest.mark.parametrize("fmt", ["bloom", "cuckoo"])
+def test_two_layer_filter_equals_exact(spark, fmt):
+    """Front-filter probe + exact confirm of suspects ≡ the exact anti-join,
+    for each format's membership kernel in the shared probe shell."""
     n_shards = 8
     seen = _urls_df(spark, [f"https://s.com/{i}" for i in range(2000)])
     cands = _urls_df(spark, [f"https://s.com/{i}" for i in range(1000, 3000)])
-    shards = build_bloom_shards(seen, n_shards, keys_per_shard=500)
-    via_bloom = sorted(
-        r.url for r in filter_unseen_with_bloom(cands, seen, shards, n_shards).collect()
+    if fmt == "bloom":
+        shards = build_bloom_shards(seen, n_shards, keys_per_shard=500)
+        contains, cols = bloom_contains, ["shard", "m", "k", "bits"]
+    else:
+        shards = build_cuckoo_shards(seen, n_shards)
+        contains, cols = cuckoo_contains, ["shard", "m", "table"]
+    assert shards.columns == cols
+    via_filter = sorted(
+        r.url
+        for r in filter_unseen_with(cands, seen, shards, n_shards, contains).collect()
     )
     via_exact = sorted(r.url for r in filter_unseen(cands, seen).collect())
-    assert via_bloom == via_exact
+    assert via_filter == via_exact
+    # and no seen url is ever flagged new at the filter layer
+    flagged = maybe_seen(seen, shards, n_shards, contains)
+    assert flagged.filter("NOT maybe_seen").count() == 0
 
 
 def test_with_shard_is_stable_partition(spark):

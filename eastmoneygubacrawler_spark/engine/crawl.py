@@ -21,6 +21,12 @@ archive/main_controller.py's stage-1/stage-2 split, SURVEY.md §3.1):
 Determinism: the crawl order is computed as data, so results are independent
 of physical execution order — equality with the reference's sequential loop
 is proven against the fixtures' pure-Python simulator in tests.
+
+Persistence: crawl intermediates are never ``cache()``d.  Every stage
+boundary is a local checkpoint of the round (engine/checkpoints.py), so each
+action plans only its own stage over ``LogicalRDD`` leaves instead of
+nesting the round so far; the blocks are released at the end of their wave
+or after the commit.
 """
 
 from __future__ import annotations
@@ -38,6 +44,7 @@ from ..functions.extract import extract_text_udf, parse_list_page_udf
 from ..operators import frontier as FR
 from ..operators.seen import filter_unseen, with_shard
 from ..storage.backend import SnapshotStore
+from .checkpoints import Checkpoints
 from .seen_index import open_round_indexes
 
 POSTS_KEY = ["stock_code", "content_type", "url_id"]
@@ -124,9 +131,10 @@ class CrawlConfig:
     # memory is a hard SparkOutOfMemoryError, not a spill (guide §3.1) —
     # measured at the r7 8x corpus (11.5M texts / 32 shuffle partitions ≈
     # 700 MB per build) where the round died in the commit; SMJ spills
-    # gracefully there.  Estimate = n_texts / shuffle_partitions ×
-    # mean_text_bytes (the measured mean html size — conservative, html ≥
-    # extracted text).
+    # gracefully there.  Estimate = n_texts / (fewest partitions AQE may
+    # coalesce the shuffle to) × mean_text_bytes (the measured mean html
+    # size — conservative, html ≥ extracted text); no hint while the mean
+    # is unmeasured (see shj_text_merge_hint).
     shj_build_budget_bytes: int = 256 * 1024 * 1024
 
 
@@ -178,12 +186,52 @@ def _pkey_hash(df: DataFrame) -> DataFrame:
     return df.withColumn("url_hash", F.xxhash64(*POSTS_KEY))
 
 
+def _coalesce_floor(spark: SparkSession) -> int:
+    """The fewest partitions a shuffle of this session can end up with:
+    AQE's coalescing floor (``coalescePartitions.minPartitionNum``, else the
+    default parallelism — or 1 when ``parallelismFirst`` is off) when
+    coalescing is on, else the static ``spark.sql.shuffle.partitions``."""
+    conf = spark.conf
+    if (
+        conf.get("spark.sql.adaptive.enabled", "true") == "true"
+        and conf.get("spark.sql.adaptive.coalescePartitions.enabled", "true") == "true"
+    ):
+        floor = conf.get("spark.sql.adaptive.coalescePartitions.minPartitionNum", None)
+        if floor is not None:
+            return int(floor)
+        if conf.get(
+            "spark.sql.adaptive.coalescePartitions.parallelismFirst", "true"
+        ) == "true":
+            return spark.sparkContext.defaultParallelism
+        return 1
+    return int(conf.get("spark.sql.shuffle.partitions", "200"))
+
+
+def shj_text_merge_hint(
+    n_texts: int,
+    mean_text_bytes: float | None,
+    min_partitions: int,
+    threshold: int,
+    budget_bytes: int,
+) -> bool:
+    """Whether the commit's posts ⋈ texts join gets the shuffle_hash hint:
+    only past ``threshold`` texts, and only while the estimated per-partition
+    hash build (``n_texts`` spread over ``min_partitions`` partitions of
+    ``mean_text_bytes`` each) fits ``budget_bytes``.  An unmeasured mean
+    withholds the hint: a guessed size could build a hash table that does
+    not fit in memory, where the sort-merge join would spill."""
+    if n_texts <= threshold or mean_text_bytes is None:
+        return False
+    return n_texts / max(min_partitions, 1) * mean_text_bytes <= budget_bytes
+
+
 def _materialize_concurrent(spark: SparkSession, frames: list) -> None:
     """Materialize several independent lazily-checkpointed frames as
     concurrent driver-thread jobs (optimization guide §2.6: actions are only
     sequential because the driver calls them sequentially) — the wall is
-    max(job), not sum(job).  Callers must have warmed any shared upstream
-    cache first so the concurrent jobs do not race to compute it."""
+    max(job), not sum(job).  Callers must have materialized any shared
+    upstream checkpoint first so the concurrent jobs do not race to compute
+    it."""
     if len(frames) <= 1:
         for df in frames:
             df.count()
@@ -225,14 +273,9 @@ def run_crawl(
         )
     t0 = time.time()
     phase_t: dict = {}
-    # every cache created for this round is registered and released after
-    # commit — a long-lived driver running many rounds must not accumulate
-    # stale cached blocks (LRU-evicting useful ones)
-    caches: list = []
-
-    def _cached(df: DataFrame) -> DataFrame:
-        caches.append(df)
-        return df.cache()
+    # every stage boundary is a local checkpoint of this round, released
+    # after the commit; the wave loop's own are released per wave
+    cp = Checkpoints()
 
     def _mark(name):
         now = time.time()
@@ -252,6 +295,7 @@ def run_crawl(
     seen_idx, posts_idx = open_round_indexes(
         spark, store, cfg, seen_prev,
         _pkey_hash(posts_keys_prev) if posts_keys_prev is not None else None,
+        cp,
     )
 
     if fetcher is None:
@@ -310,7 +354,7 @@ def run_crawl(
             F.col("p.all_nick_ok").alias("all_nick_ok"),
             F.col("html").isNull().alias("fetch_failed"),
         )
-        .transform(_cached)
+        .transform(cp)
     )
 
     # probe skip rules: bad nickname / captcha / no_json / fetch miss ⇒ the
@@ -341,7 +385,7 @@ def run_crawl(
             F.col("total_count").alias("expected_count"),
         )
     )
-    list_frontier = _with_url_identity(list_frontier, cfg.n_salts).transform(_cached)
+    list_frontier = _with_url_identity(list_frontier, cfg.n_salts).transform(cp)
 
     # ---- wave loop over list pages ------------------------------------------
     # Politeness waves process each host's pages in canonical order, so within
@@ -349,7 +393,9 @@ def run_crawl(
     # waves — first-processed occurrence == global first occurrence, which
     # lets new-counts be computed incrementally per wave.  Every accumulator
     # is lineage-truncated (localCheckpoint) each wave: iterative plan growth
-    # is exponential otherwise (union-of-union + window recompute).
+    # is exponential otherwise (union-of-union + window recompute).  Frames
+    # only this wave reads (batch, fetch, page rows, posts-key suspects) are
+    # checkpointed in ``wave_cp`` and released at the end of the wave.
     pending = list_frontier
     all_items = None  # accumulated NEW items (project source)
     round_keys = None  # item keys already counted this round
@@ -362,20 +408,22 @@ def run_crawl(
 
     while waves < cfg.max_waves:
         waves += 1
+        wave_cp = Checkpoints()
         if horizons is not None:
             pending = FR.prune_beyond_horizon(pending, horizons)
         batch, over_budget = FR.politeness_split(
             pending, cfg.budget_per_host, host_budgets=list_budgets
         )
-        batch = batch.transform(_cached)
+        batch = batch.transform(wave_cp)
         _mark('schedule')
         n_batch = batch.count()
         if n_batch == 0:
+            wave_cp.release()
             break
         # next wave's carry is the rank complement — no anti-join; with an
         # unbounded budget it is a statically-empty LocalRelation, so the
         # terminating wave's schedule/count costs nothing
-        pending = over_budget.localCheckpoint(eager=False)
+        pending = cp(over_budget)
 
         # size-aware strategy pick (CrawlConfig.bounded_bc_max_rows): the
         # wave batch count is already in hand, so an over-cap wave falls
@@ -389,11 +437,11 @@ def run_crawl(
             )
             .withColumn("partition_id", F.spark_partition_id())
             .withColumn("p", parse_list_page_udf(F.col("html"), F.col("expected_count")))
-            .cache()
+            .transform(wave_cp)
         )
         list_fetched_rows += n_batch
         # lazy here; materialized concurrently with the wave-outcome frame
-        # below once the fetched/page_rows caches are warm (guide §2.6)
+        # below once the fetched/page_rows checkpoints are materialized (§2.6)
         wave_lineage = (
             fetched.groupBy("partition_id", "host")
             .agg(
@@ -403,7 +451,7 @@ def run_crawl(
             )
             .withColumn("stage", F.lit("list_fetch"))
             .withColumn("round", F.lit(round_id))
-            .localCheckpoint(eager=False)  # tiny; avoids refetch at commit
+            .transform(cp)  # tiny; avoids refetch at commit
         )
         lineage_frames.append(wave_lineage)
 
@@ -413,7 +461,7 @@ def run_crawl(
             F.col("p.status").alias("status"),
             F.col("p.items").alias("items"),
             (F.col("html").isNotNull() & F.col("p.status").isin("ok", "no_data")).alias("ok"),
-        ).cache()
+        ).transform(wave_cp)
 
         items = (
             page_rows.filter(F.col("ok"))
@@ -453,7 +501,7 @@ def run_crawl(
                     posts_keys_prev, on=POSTS_KEY, how="left_anti"
                 )
             else:
-                flagged = flagged.drop("url_hash").localCheckpoint(eager=True)
+                flagged = wave_cp(flagged.drop("url_hash"), eager=True)
                 suspects = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
                 fresh_rows = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
                 # resolve the (few) suspects with the corpus on the STREAM
@@ -476,19 +524,19 @@ def run_crawl(
                         F.broadcast(dup_keys), on=POSTS_KEY, how="left_anti"
                     )
                 )
-        firsts_wave = firsts_wave.localCheckpoint(eager=True)
+        firsts_wave = cp(firsts_wave, eager=True)
         _mark('list_fetch_parse')
 
         all_items = (
             firsts_wave
             if all_items is None
-            else all_items.unionByName(firsts_wave).localCheckpoint(eager=False)
+            else cp(all_items.unionByName(firsts_wave))
         )
         keys_wave = firsts_wave.select(*POSTS_KEY)
         round_keys = (
             keys_wave
             if round_keys is None
-            else round_keys.unionByName(keys_wave).localCheckpoint(eager=False)
+            else cp(round_keys.unionByName(keys_wave))
         )
 
         new_counts = firsts_wave.groupBy("stock_code", "content_type", "page").agg(
@@ -505,11 +553,11 @@ def run_crawl(
             page_rows.select("stock_code", "content_type", "page", "url", "ok")
             .join(new_counts, on=["stock_code", "content_type", "page"], how="left")
             .withColumn("new_count", F.coalesce(F.col("new_count"), F.lit(0)))
-            .localCheckpoint(eager=False)
+            .transform(cp)
         )
         # materialize the two independent lazy checkpoints concurrently —
-        # the firsts_wave job above already warmed the fetched/page_rows
-        # caches, so these are two small jobs racing nothing
+        # the firsts_wave job above already materialized the fetched/
+        # page_rows checkpoints, so these are two small jobs racing nothing
         _materialize_concurrent(spark, [wave_lineage, wave_pages])
         list_seen_pages = list_seen_pages.unionByName(
             wave_pages.filter(F.col("ok")).select(
@@ -526,10 +574,9 @@ def run_crawl(
         )
         horizons = FR.duplicate_page_horizon(
             page_stats_acc, cfg.duplicate_page_threshold
-        ).transform(_cached)
-        batch.unpersist()
-        fetched.unpersist()
-        page_rows.unpersist()
+        ).transform(cp)
+        # every frame built on this wave's blocks is materialized by now
+        wave_cp.release()
 
     if all_items is None:
         new_items_final = None
@@ -566,9 +613,10 @@ def run_crawl(
             out_col="crawl_seq",
             start=prev_count + 1,
             n_partitions=cfg.fetch_partitions,
+            checkpoint=cp,
         )
 
-    posts_new = posts_new.transform(_cached)
+    posts_new = posts_new.transform(cp)
     _mark('horizon_misc')
     # one aggregate yields the round's post count AND the comment-page total
     # that sizes the depth-2 fetch batch (the broadcast-vs-SMJ gate signal) —
@@ -657,18 +705,18 @@ def run_crawl(
         # URLs never refetched)
         if seen_prev is not None:
             cand = seen_idx.filter_unseen(cand, seen_prev)
-        cand = cand.transform(_cached)
+        cand = cand.transform(cp)
 
         text_budget = cfg.text_budget_per_host or cfg.budget_per_host
-        # cache: the schedule feeds the fetch/scan,
-        # and (scan_extract mode) the sizing count + distributed blob build
+        # checkpoint: the schedule feeds the fetch/scan and the pending rows;
         # salted two-phase rank: the depth-1 frontier is the whole round's
         # post list, ~all on one host — the plain window would single-task it
         scheduled, unscheduled = FR.politeness_split(
             cand, text_budget, host_budgets=text_budgets,
             n_salts=cfg.n_salts,
         )
-        scheduled = scheduled.transform(_cached)
+        if scheduled is not cand:  # an unbounded split returns cand itself
+            scheduled = scheduled.transform(cp)
         if text_mode == "scan_extract":
             from .fetch import scan_extract
 
@@ -683,7 +731,7 @@ def run_crawl(
                 # a scheduled url absent from pages never left the scan:
                 # null struct ⇒ fetch miss, same as the join path's null html
                 F.coalesce(F.col("e.status"), F.lit("no_html")).alias("extract_status"),
-            ).transform(_cached)
+            ).transform(cp)
         else:
             fetched_posts = (
                 _fetch(
@@ -702,7 +750,7 @@ def run_crawl(
                     F.col("e.post_time").alias("full_text_time"),
                     F.col("e.status").alias("extract_status"),
                 )
-                .transform(_cached)
+                .transform(cp)
             )
         out["lineage"] = (
             fetched_posts.groupBy("partition_id", "host")
@@ -722,7 +770,7 @@ def run_crawl(
         out["text_ok"] = text_ok
         # ONE aggregate job yields both the fetch count and the mean html
         # size that drives next round's auto mode selection (was two
-        # sequential actions on the cached frame)
+        # sequential actions on the checkpointed frame)
         stat = fetched_posts.agg(
             F.count("*").alias("n"), F.avg("bytes").alias("mb")
         ).head(1)[0]
@@ -811,13 +859,14 @@ def run_crawl(
             d2_cand = FR.robots_gate(d2_cand, robots)
         if seen_prev is not None:
             d2_cand = filter_unseen(d2_cand, seen_prev)
-        d2_cand = d2_cand.transform(_cached)
+        d2_cand = d2_cand.transform(cp)
         text_budget = cfg.text_budget_per_host or cfg.budget_per_host
         c_sched, c_unsched = FR.politeness_split(
             d2_cand, text_budget, host_budgets=text_budgets,
             n_salts=cfg.n_salts,
         )
-        c_sched = c_sched.transform(_cached)
+        if c_sched is not d2_cand:
+            c_sched = c_sched.transform(cp)
         # same size-aware pick as the list waves, gated on the comment-page
         # total already computed in the posts-project aggregate (no extra
         # driver job).  The estimate covers this round's NEW comment pages;
@@ -845,13 +894,13 @@ def run_crawl(
                 F.col("p.items").alias("items"),
                 (F.col("html").isNotNull() & (F.col("p.status") == "ok")).alias("ok"),
             )
-            .transform(_cached)
+            .transform(cp)
         )
         out["n_comment_fetched"] = fetched_c.count()
         phase_t['comment_fetch'] = round(
             time.time() - t_d2, 3
         ) + phase_t.get('comment_fetch', 0.0)
-        out["lineage"] = (
+        out["lineage"] = cp(
             fetched_c.groupBy("partition_id", "host")
             .agg(
                 F.count("*").alias("fetched"),
@@ -859,8 +908,8 @@ def run_crawl(
                 F.sum("bytes").alias("bytes"),
             )
             .withColumn("stage", F.lit("comment_fetch"))
-            .withColumn("round", F.lit(round_id))
-            .localCheckpoint(eager=True)
+            .withColumn("round", F.lit(round_id)),
+            eager=True,
         )
         out["comment_seen_urls"] = fetched_c.filter(F.col("ok")).select("url")
 
@@ -903,7 +952,7 @@ def run_crawl(
                 touched,
                 on=["stock_code", "content_type", "post_url_id"],
                 how="left_semi",
-            ).transform(_cached)  # two consumers: window union + anti-join
+            ).transform(cp)  # two consumers: window union + anti-join
             prev_raw = prev_touched.select(
                 "stock_code", "content_type", "post_url_id", "page",
                 "reply_id", "reply_user", "reply_text", "reply_time_raw",
@@ -1032,16 +1081,9 @@ def run_crawl(
             # not fit execution memory is a hard OOM, not a spill — the r7
             # 8x-corpus run died here at ~700 MB per-partition builds; SMJ
             # sorts-and-spills safely in that regime (guide §3.1).
-            _shuf_parts = int(
-                spark.conf.get("spark.sql.shuffle.partitions", "200")
-            )
-            _build_est = (
-                n_text_fetched / max(_shuf_parts, 1)
-                * float(mean_text_bytes or 2048)
-            )
-            if (
-                n_text_fetched > cfg.shj_text_merge_threshold
-                and _build_est <= cfg.shj_build_budget_bytes
+            if shj_text_merge_hint(
+                n_text_fetched, mean_text_bytes, _coalesce_floor(spark),
+                cfg.shj_text_merge_threshold, cfg.shj_build_budget_bytes,
             ):
                 upd = upd.hint("shuffle_hash")
             posts_out = (
@@ -1210,11 +1252,10 @@ def run_crawl(
     )
 
     _mark('commit')
-    # counted while the probe cache is still warm: after the unpersist the
-    # count would re-run (and, over HTTP, re-request) the probe fetch
+    # counted before the release: the probe fetch is not re-run (over HTTP,
+    # re-requested) and its checkpoint blocks are still there to read
     n_probes = probe_res.count()
-    for df_ in caches:  # release this round's blocks (commit is durable)
-        df_.unpersist()
+    cp.release()  # the commit is durable; nothing reads this round's blocks
     phase_t.pop('_last', None)
     wall_s = time.time() - t0
     urls_fetched = list_fetched_rows + n_text_fetched + n_comment_fetched + n_probes

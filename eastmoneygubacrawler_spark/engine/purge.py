@@ -38,7 +38,21 @@ from pyspark.sql import functions as F
 
 from ..functions import urls as U
 from ..storage.backend import SnapshotStore
+from .checkpoints import Checkpoints
 from .seen_index import committed_seen_index
+
+
+def purged_in_seen(purged: DataFrame, seen: DataFrame) -> DataFrame:
+    """Rows of ``purged`` (distinct urls) whose url is in ``seen``, in
+    O(purge delta): the seen scan streams through a semi-join against the
+    broadcast purge list, and only those matches — at most a few rows per
+    purged url — are broadcast back into a semi-join of ``purged``, which
+    keeps each purged row once.  No shuffle or aggregate touches the seen
+    table."""
+    matches = seen.select("url").join(
+        F.broadcast(purged.select("url")), on="url", how="left_semi"
+    )
+    return purged.join(F.broadcast(matches), on="url", how="left_semi")
 
 
 def purge_urls(
@@ -53,17 +67,18 @@ def purge_urls(
 
     ``n_shards``: cuckoo index geometry, defaulted from the manifest meta.
     """
+    cp = Checkpoints()  # released once the purge has committed
     # the FULL canonicalized purge list drives the posts/frontier deletes:
     # a url can sit in posts metadata or frontier retry state without ever
     # having entered seen (text fetch not yet succeeded), and the purge
     # contract is "gone from every surface", not "gone if seen"
-    purged = (
+    purged = cp(
         urls.select(U.canonicalize_url(F.col("url")).alias("url"))
         .distinct()
-        .withColumn("url_hash", U.url_hash(F.col("url")))
+        .withColumn("url_hash", U.url_hash(F.col("url"))),
         # several consumers (delete files, frontier filter, cuckoo delete)
         # — materialize once; also fixes the metrics count without rescans
-        .localCheckpoint(eager=True)
+        eager=True,
     )
     n_purged = purged.count()
     seen_prev = store.load(spark, "seen")
@@ -73,9 +88,7 @@ def purge_urls(
         # restricted to actually-seen urls while the equality deletes below
         # stay on the full list (posts metadata / frontier retry rows can
         # carry urls that never reached seen)
-        purged_seen = purged.join(
-            seen_prev.select("url").distinct(), on="url", how="left_semi"
-        ).localCheckpoint(eager=True)
+        purged_seen = cp(purged_in_seen(purged, seen_prev), eager=True)
     else:
         purged_seen = purged.limit(0)
     n_purged_seen = purged_seen.count()
@@ -116,7 +129,7 @@ def purge_urls(
     # drops the keys in place and stays fresh; a bloom's entry is left to lag
     # the store round, so the next crawl rebuilds it from the post-purge seen
     # table
-    index = committed_seen_index(spark, store, n_shards)
+    index = committed_seen_index(spark, store, cp, n_shards)
     kept = index.purge(purged_seen, round_id) if index is not None else None
     if kept is not None:
         snapshots[index.table], meta[index.table] = kept
@@ -128,6 +141,7 @@ def purge_urls(
     # actual < meta as legitimate for the same reason.
 
     store.commit(round_id, snapshots=snapshots, deletes=deletes, meta=meta)
+    cp.release()
     return {
         "round": round_id,
         "urls_purged": n_purged,          # full canonicalized request list

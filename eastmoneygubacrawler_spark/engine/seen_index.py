@@ -14,6 +14,8 @@ drive every index through the same :class:`FilterIndex` methods:
    negatives, i.e. refetches and duplicate rows — so only a fresh entry is
    loaded.  Otherwise the first probe builds the blobs from the stored keys,
    once, lazily checkpointed, and the commit merges into that same build.
+   Every checkpoint goes through the caller's round-scoped
+   :class:`~.checkpoints.Checkpoints`, which releases it after the commit.
 2. **probe** — :meth:`FilterIndex.maybe_seen` flags rows; a miss is
    definitely new.  :meth:`FilterIndex.filter_unseen` confirms the flagged
    suspects with the exact anti-join (operators/seen.py).
@@ -33,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..operators import cuckoo as CK
 from ..operators import seen as SE
 from ..storage.backend import SnapshotStore
+from .checkpoints import Checkpoints
 
 
 class BloomFormat:
@@ -49,7 +52,8 @@ class BloomFormat:
     def build(self, keys: DataFrame) -> DataFrame:
         return SE.build_bloom_shards(keys, self.n_shards, fpp=self.fpp)
 
-    def merge(self, base: DataFrame, delta: DataFrame, all_keys: DataFrame) -> DataFrame:
+    def merge(self, base: DataFrame, delta: DataFrame, all_keys: DataFrame,
+              checkpoint) -> DataFrame:
         return SE.merge_bloom_shards(base, self.build(delta))
 
 
@@ -67,13 +71,12 @@ class CuckooFormat:
         # it overflows into a rebuild
         return CK.build_cuckoo_shards(keys, self.n_shards, headroom=2.0)
 
-    def merge(self, base: DataFrame, delta: DataFrame, all_keys: DataFrame) -> DataFrame:
+    def merge(self, base: DataFrame, delta: DataFrame, all_keys: DataFrame,
+              checkpoint) -> DataFrame:
         # checkpoint: rebuild_overflowed_shards probes the merged blobs (head
         # over the flag column) and then they are written — without it the
         # cogrouped merge would execute twice
-        merged = CK.merge_cuckoo_shards(base, delta, self.n_shards).localCheckpoint(
-            eager=True
-        )
+        merged = checkpoint(CK.merge_cuckoo_shards(base, delta, self.n_shards), eager=True)
         return CK.rebuild_overflowed_shards(merged, all_keys, self.n_shards)
 
     def delete(self, blobs: DataFrame, keys: DataFrame) -> DataFrame:
@@ -85,20 +88,23 @@ class FilterIndex:
     ``source`` — a frame with a ``url_hash`` column holding every key stored
     before this round.  ``fmt=None`` has no format operations: the exact-only
     index of a ``use_bloom=False`` round, or a purge-side bloom, which cannot
-    delete."""
+    delete.  ``checkpoint`` (a :class:`~.checkpoints.Checkpoints`) takes every
+    checkpoint the index makes."""
 
     def __init__(self, table: str, fmt, geom: dict | None,
-                 stored: DataFrame | None, source: DataFrame | None):
+                 stored: DataFrame | None, source: DataFrame | None,
+                 checkpoint: Checkpoints):
         self.table = table
         self.fmt = fmt
         self.geom = geom
         self.stored = stored  # blobs of a fresh manifest entry, else None
         self.source = source
+        self.checkpoint = checkpoint
         self._bootstrap = None
 
     @classmethod
     def open(cls, spark: SparkSession, store: SnapshotStore, table: str,
-             fmt, source: DataFrame | None) -> FilterIndex:
+             fmt, source: DataFrame | None, checkpoint: Checkpoints) -> FilterIndex:
         """Load the stored blobs when the meta entry matches ``fmt``'s
         geometry and covers the store's current round."""
         meta = store.meta().get(table) if fmt is not None else None
@@ -108,7 +114,7 @@ class FilterIndex:
             and meta.get("round") == store.current_round()
         )
         stored = store.load(spark, table) if fresh else None
-        return cls(table, fmt, fmt.geom if fmt else None, stored, source)
+        return cls(table, fmt, fmt.geom if fmt else None, stored, source, checkpoint)
 
     def shards(self) -> DataFrame | None:
         """The stored blobs, else the bootstrap build from ``source`` — built
@@ -118,7 +124,7 @@ class FilterIndex:
         if self.stored is not None:
             return self.stored
         if self._bootstrap is None and self.fmt is not None and self.source is not None:
-            self._bootstrap = self.fmt.build(self.source).localCheckpoint(eager=False)
+            self._bootstrap = self.checkpoint(self.fmt.build(self.source))
         return self._bootstrap
 
     def maybe_seen(self, df: DataFrame) -> DataFrame | None:
@@ -143,7 +149,7 @@ class FilterIndex:
         if seen is not None:
             delta = self._unseen(delta, seen, self.stored)
         if self.fmt is not None:
-            delta = delta.localCheckpoint(eager=True)
+            delta = self.checkpoint(delta, eager=True)
         return delta
 
     def _unseen(self, df: DataFrame, seen: DataFrame,
@@ -171,7 +177,7 @@ class FilterIndex:
             all_keys = delta.select("url_hash")
             if self.source is not None:
                 all_keys = self.source.select("url_hash").unionByName(all_keys)
-            blobs = self.fmt.merge(base, delta, all_keys)
+            blobs = self.fmt.merge(base, delta, all_keys, self.checkpoint)
         return blobs, {**self.geom, "round": round_id}
 
     def purge(self, keys: DataFrame, round_id: int) -> tuple | None:
@@ -186,7 +192,8 @@ class FilterIndex:
 
 def open_round_indexes(spark: SparkSession, store: SnapshotStore, cfg,
                        seen_prev: DataFrame | None,
-                       post_keys_prev: DataFrame | None) -> tuple:
+                       post_keys_prev: DataFrame | None,
+                       checkpoint: Checkpoints) -> tuple:
     """The (URL-seen, posts-key) indexes of one crawl round, per the
     CrawlConfig ``cfg`` (``use_bloom``, ``seen_filter``, ``bloom_fpp``)."""
     seen_fmt = posts_fmt = None
@@ -195,12 +202,14 @@ def open_round_indexes(spark: SparkSession, store: SnapshotStore, cfg,
         seen_fmt = CuckooFormat(cfg.n_shards) if cfg.seen_filter == "cuckoo" else posts_fmt
     seen_table = "seen_cuckoo" if isinstance(seen_fmt, CuckooFormat) else "seen_bloom"
     return (
-        FilterIndex.open(spark, store, seen_table, seen_fmt, seen_prev),
-        FilterIndex.open(spark, store, "posts_bloom", posts_fmt, post_keys_prev),
+        FilterIndex.open(spark, store, seen_table, seen_fmt, seen_prev, checkpoint),
+        FilterIndex.open(spark, store, "posts_bloom", posts_fmt, post_keys_prev,
+                         checkpoint),
     )
 
 
 def committed_seen_index(spark: SparkSession, store: SnapshotStore,
+                         checkpoint: Checkpoints,
                          n_shards: int | None = None) -> FilterIndex | None:
     """The URL-seen index whose manifest entry covers the store's current
     round, with the geometry that entry records (at most one is fresh: each
@@ -213,9 +222,9 @@ def committed_seen_index(spark: SparkSession, store: SnapshotStore,
             continue
         geom = {f: v for f, v in entry.items() if f != "round"}
         if table == "seen_bloom":
-            return FilterIndex(table, None, geom, None, None)
+            return FilterIndex(table, None, geom, None, None, checkpoint)
         stored = store.load(spark, table)
         if stored is not None:
             fmt = CuckooFormat(n_shards or entry["n_shards"])
-            return FilterIndex(table, fmt, geom, stored, None)
+            return FilterIndex(table, fmt, geom, stored, None, checkpoint)
     return None

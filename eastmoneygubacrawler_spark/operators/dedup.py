@@ -21,16 +21,19 @@ All hashes are md5-derived so the DuckDB oracle can reproduce them bit-for-bit
 (Spark xxhash64/hash are engine-private; md5 is universal).
 
 Persistence tradeoff (applies to every ``localCheckpoint`` in this package):
-operators persist intermediates with ``localCheckpoint(eager=True)``, not
-``cache()``, because a lazily-returned frame can never unpersist its cache —
-CacheManager would pin the plan forever.  The cost is fault tolerance: local
-checkpoint blocks are not recomputable, so on a multi-executor cluster losing
-an executor fails the queries built on that block instead of recomputing it.
-That is the right default here — these are bounded intermediates inside one
-job, and a failed query is simply re-run from source — but a long-lived
-clustered deployment that cannot afford re-runs should switch the persistence
-seam to reliable ``checkpoint()`` (HDFS/S3-backed) or caller-controlled
-``persist``/``unpersist`` around the operator call.
+intermediates are never ``cache()``d.  Operators persist with
+``localCheckpoint(eager=True)``, because a lazily-returned frame can never
+unpersist its cache — CacheManager would pin the plan forever — and a cached
+frame nests its whole upstream plan into every later action.  The crawl
+round and the purge make every stage boundary a local checkpoint recorded in
+an engine/checkpoints.Checkpoints, released at round end (per wave for the
+wave loop's own).  The cost is fault tolerance: local checkpoint blocks are
+not recomputable, so on a multi-executor cluster losing an executor fails the
+queries built on that block instead of recomputing it.  That is the right
+default here — these are bounded intermediates inside one job, and a failed
+query is simply re-run from source — but a long-lived clustered deployment
+that cannot afford re-runs should switch the persistence seam to reliable
+``checkpoint()`` (HDFS/S3-backed).
 """
 
 from __future__ import annotations

@@ -30,11 +30,18 @@ def global_row_number(
     out_col: str = "seq",
     start: int = 1,
     n_partitions: int | None = None,
+    checkpoint=None,
 ) -> DataFrame:
     """Deterministic global 1-based rank over ``order_cols``, distributed.
 
     ``order_cols`` entries may be column names (sorted asc_nulls_last) or
-    ready sort Columns (e.g. ``F.col("x").desc()``)."""
+    ready sort Columns (e.g. ``F.col("x").desc()``).
+
+    The range-partitioned rows are read twice (partition sizes, local ranks)
+    and must agree, so they are materialized once: by ``checkpoint`` (a
+    callable returning a lineage-truncated frame — the crawl round passes
+    its engine.checkpoints.Checkpoints, which releases the blocks), else by a
+    lazy local checkpoint the caller cannot release."""
     sort_cols = [
         F.col(c).asc_nulls_last() if isinstance(c, str) else c for c in order_cols
     ]
@@ -42,7 +49,7 @@ def global_row_number(
     ranged = df.repartitionByRange(n_partitions, *sort_cols).withColumn(
         "_pid", F.spark_partition_id()
     )
-    ranged = ranged.persist()
+    ranged = checkpoint(ranged) if checkpoint else ranged.localCheckpoint(eager=False)
     # partition sizes → exclusive prefix sums via a P×P self-join (P = one
     # row per partition, so this is tiny) — no Exchange SinglePartition
     sizes = ranged.groupBy("_pid").agg(F.count("*").alias("_n"))

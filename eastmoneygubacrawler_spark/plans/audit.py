@@ -64,3 +64,20 @@ def assert_no_row_udf(df: DataFrame) -> None:
     ArrowEvalPython (pandas UDFs) is the sanctioned extension point."""
     plan = explain_str(df, "extended")
     assert "BatchEvalPython" not in plan, f"row-at-a-time Python UDF in plan:\n{plan}"
+
+
+def assert_no_cached_lineage(df: DataFrame, max_plan_bytes: int) -> None:
+    """The plan must not nest a cached upstream plan (``InMemoryRelation`` /
+    ``InMemoryTableScan``) and its text must stay under ``max_plan_bytes``:
+    stage boundaries are released local checkpoints, so a frame plans only
+    its own stage over ``LogicalRDD`` leaves — a plan that grows with the
+    round is what Spark re-renders at every execution start and AQE
+    re-plan."""
+    plan = explain_str(df)
+    for node in ("InMemoryRelation", "InMemoryTableScan"):
+        assert node not in plan, f"cached lineage ({node}) in plan:\n{plan}"
+    size = len(plan.encode())
+    assert size <= max_plan_bytes, (
+        f"plan text is {size} bytes, over the {max_plan_bytes}-byte bound:\n"
+        f"{plan[:4000]}"
+    )

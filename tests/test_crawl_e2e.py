@@ -175,6 +175,48 @@ def test_shj_text_merge_identical(spark, crawl_result, tmp_path_factory):
     assert ref.exceptAll(got).isEmpty() and got.exceptAll(ref).isEmpty()
 
 
+def test_shj_text_merge_hint_gate():
+    """The shuffled-hash text merge is hinted only past the text threshold,
+    only while the per-partition build estimate fits the budget, and never
+    on an unmeasured mean text size."""
+    from eastmoneygubacrawler_spark.engine.crawl import shj_text_merge_hint
+
+    budget = 256 * 2**20
+
+    def hint(n, mean, parts):
+        return shj_text_merge_hint(n, mean, parts, 100_000, budget)
+
+    assert not hint(100_000, 3000.0, 8)  # at the threshold: broadcast wins
+    assert hint(200_000, 3000.0, 8)  # 75 MB per partition
+    assert not hint(800_000, 3000.0, 8)  # 300 MB per partition: over budget
+    assert hint(800_000, 3000.0, 16)  # the same texts over more partitions
+    assert not hint(200_000, None, 8)  # unmeasured: no guessed size
+
+
+def test_coalesce_floor_follows_aqe(spark):
+    """The SHJ estimate divides by the fewest partitions AQE may coalesce
+    the shuffle to, not by the static shuffle partition count."""
+    from eastmoneygubacrawler_spark.engine.crawl import _coalesce_floor
+
+    keys = ("spark.sql.adaptive.coalescePartitions.minPartitionNum",
+            "spark.sql.adaptive.coalescePartitions.enabled")
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        spark.conf.unset(keys[0])
+        spark.conf.set(keys[1], "true")
+        assert _coalesce_floor(spark) == spark.sparkContext.defaultParallelism
+        spark.conf.set(keys[0], "3")
+        assert _coalesce_floor(spark) == 3
+        spark.conf.set(keys[1], "false")
+        assert _coalesce_floor(spark) == int(spark.conf.get("spark.sql.shuffle.partitions"))
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def test_metrics_and_lineage(spark, crawl_result):
     m = crawl_result["metrics"]
     assert m["posts_new"] > 500

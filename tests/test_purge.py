@@ -307,3 +307,31 @@ def test_purge_removes_mor_patch_text(spark, corpus, tmp_path):
     store.compact(spark, "posts")
     after = store.load(spark, "posts").filter(F.col("url") == target).collect()
     assert len(after) == 1 and after[0].full_text == expected_text
+
+
+def test_purged_in_seen_is_o_purge_delta(spark, tmp_path):
+    """The purge's seen intersection streams the seen scan into a broadcast
+    semi-join: no shuffle and no aggregate over the seen table, and a url
+    stored in several seen deltas is still purged once."""
+    from eastmoneygubacrawler_spark.engine.purge import purged_in_seen
+    from eastmoneygubacrawler_spark.plans.audit import explain_str
+
+    store = SnapshotStore(str(tmp_path / "s"))
+    seen = spark.range(2000).select(
+        F.concat(F.lit("https://h.example.com/"), F.col("id").cast("string")).alias("url")
+    )
+    store.commit(0, appends={"seen": seen})
+    store.commit(1, appends={"seen": seen.filter(F.col("id") < 10)})
+    purged = spark.createDataFrame(
+        [("https://h.example.com/1",), ("https://h.example.com/500",),
+         ("https://never.example.com/x",)],
+        ["url"],
+    ).withColumn("url_hash", F.xxhash64("url"))
+    got = purged_in_seen(purged, store.load(spark, "seen"))
+    plan = explain_str(got)
+    assert "Exchange hashpartitioning" not in plan, plan
+    assert "HashAggregate" not in plan, plan
+    assert sorted(r.url for r in got.collect()) == [
+        "https://h.example.com/1", "https://h.example.com/500",
+    ]
+    assert got.columns == ["url", "url_hash"]
